@@ -57,14 +57,30 @@ def crawl_cfg():
 
 
 @pytest.fixture(scope="module")
-def crawled(spark, world, tmp_path_factory):
+def crawl_run(spark, world, tmp_path_factory):
+    """The crawl, plus the ids of RDDs it created that stay persisted."""
     corpus_pd, images_pd, robots_pd, seeds_pd, corpus, images, robots, seeds = world
     cat = Catalog(str(tmp_path_factory.mktemp("crawl")))
+    persisted = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())  # noqa: E731
+    before = persisted()
     frontier_ops.run_crawl(
         spark, cat, corpus, images, robots, seeds, N_EPOCHS, crawl_cfg()
     )
+    leaked = persisted() - before
     model = run_model(corpus_pd, images_pd, robots_pd, seeds_pd)
-    return cat, model
+    return cat, model, leaked
+
+
+@pytest.fixture(scope="module")
+def crawled(crawl_run):
+    return crawl_run[:2]
+
+
+def test_crawl_releases_every_frame_it_persists(crawl_run):
+    """Every frame the epochs cut or pin is unpersisted after their
+    commits (compared as id sets: the ContextCleaner may free older
+    RDDs meanwhile)."""
+    assert crawl_run[2] == set()
 
 
 def test_fetch_log_matches_model(spark, crawled):

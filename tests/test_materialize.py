@@ -1,12 +1,10 @@
 """The lineage-truncation seam (operators/materialize.py): every
 bounded-round iterative operator must produce IDENTICAL results under
 
-* the executor-local default (``localCheckpoint``, eager),
-* the lazy local variant (cut folded into the first consuming job),
+* the executor-local default (lazy ``localCheckpoint``, cut folded into
+  the first consuming job), and
 * the durable parquet round-trip (the preemptible-cluster seam the
-  reference's resume contract demands — IndexIT.java:107-135), and
-* a cadence-2 materializer (persist between cuts — the round-6
-  barrier-relief configuration for large graphs).
+  reference's resume contract demands — IndexIT.java:107-135).
 
 The recurrences are integer fixed-point, so "identical" is exact row
 equality, not tolerance."""
@@ -31,10 +29,8 @@ EDGES = (
 
 def _backends(tmp_path):
     return {
-        "local": "local",
         "local_lazy": "local_lazy",
         "parquet": f"parquet:{tmp_path}/snaps",
-        "cadence2": Materializer("local", every=2),
     }
 
 
@@ -89,17 +85,34 @@ def test_parquet_backend_leaves_inspectable_snapshots(spark, tmp_path):
 
 
 def test_materializer_of_coercions(tmp_path):
-    m = Materializer("local", every=3)
+    m = Materializer()
     assert Materializer.of(m) is m
-    assert Materializer.of(None).mode == "local"
+    assert Materializer.of(None).mode == "local_lazy"
     p = Materializer.of(f"parquet:{tmp_path}/x")
     assert p.mode == "parquet" and p.path == f"{tmp_path}/x"
     with pytest.raises(ValueError):
-        Materializer("nope")
+        Materializer("local")  # only local_lazy and parquet exist
     with pytest.raises(ValueError):
         Materializer("parquet")  # needs a path
     with pytest.raises(TypeError):
         Materializer.of(42)
+
+
+def test_release_frees_cuts_and_pins(spark):
+    """release() (the context-manager exit) unpersists every local
+    checkpoint and persist the owner made, used or not."""
+    import pyspark.sql.functions as F
+
+    sc = spark.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keys())
+    df = spark.range(50).groupBy((F.col("id") % 5).alias("k")).count()
+    with Materializer() as mat:
+        cut = mat.cut(df)
+        pinned = mat.pin(df.where("k > 1"))
+        mat.cut(df.where("k > 2"))  # never consumed
+        assert cut.join(pinned, "k").count() == 3
+        assert set(sc._jsc.getPersistentRDDs().keys()) - before
+    assert not set(sc._jsc.getPersistentRDDs().keys()) - before
 
 
 def test_kcore_run_to_fixpoint(spark):

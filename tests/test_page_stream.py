@@ -113,3 +113,90 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     page_stream.apply_page_batch(spark, cat, pages, batch_id=0)
     assert {t: cat.table(t).head() for t in page_stream.STREAM_TABLES} == heads
     assert _snap(cat.table("uri_counts").read(spark)) == before
+
+
+def _persisted(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_batch_releases_every_frame_it_persists(spark, tmp_path):
+    """Every frame a micro-batch cuts or pins is unpersisted once its
+    commits ran: compared as id sets, since the ContextCleaner may free
+    older RDDs meanwhile."""
+    fixture = os.path.join(os.path.dirname(__file__), "golden", "5-pages.txt")
+    cat = Catalog(str(tmp_path / "cat"))
+    page_stream._empty_state(spark, cat)
+    pages = read_pages_json(spark, fixture)
+    before = _persisted(spark)
+    page_stream.apply_page_batch(spark, cat, pages, batch_id=0)
+    assert cat.table("index_rows").epoch_of_head() == 0
+    assert _persisted(spark) - before == set()
+
+
+def test_failed_commits_are_all_reported(spark, tmp_path, monkeypatch):
+    """Two table commits of one micro-batch fail: the raised error names
+    both tables and both exceptions, and the batch's frames are still
+    released."""
+    import pytest
+
+    from webindex_spark.sources.snapshots import SnapshotTable
+
+    fixture = os.path.join(os.path.dirname(__file__), "golden", "5-pages.txt")
+    cat = Catalog(str(tmp_path / "cat"))
+    page_stream._empty_state(spark, cat)
+    pages = read_pages_json(spark, fixture)
+    real_commit = SnapshotTable.commit
+
+    def failing(self, df, **kw):
+        if self.name in ("uri_counts", "domain_counts"):
+            raise ValueError(f"disk full under {self.name}")
+        return real_commit(self, df, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "commit", failing)
+    before = _persisted(spark)
+    with pytest.raises(RuntimeError) as err:
+        page_stream.apply_page_batch(spark, cat, pages, batch_id=0)
+    msg = str(err.value)
+    for name in ("uri_counts", "domain_counts"):
+        assert f"{name}: ValueError('disk full under {name}')" in msg
+    assert _persisted(spark) - before == set()
+
+
+def test_restart_after_failed_init_commit(spark, tmp_path, monkeypatch):
+    """One of the concurrent init commits dies while the others publish:
+    the restarted stream initializes the missing table and its state
+    equals a batch build."""
+    import pytest
+
+    from webindex_spark.sources.snapshots import SnapshotTable
+
+    fixture = os.path.join(os.path.dirname(__file__), "golden", "5-pages.txt")
+    in_dir, ckpt = tmp_path / "in", tmp_path / "ckpt"
+    in_dir.mkdir()
+    (in_dir / "a.json").write_text(open(fixture, encoding="utf-8").read())
+    cat = Catalog(str(tmp_path / "cat"))
+    real_commit = SnapshotTable.commit
+
+    def crashing(self, df, **kw):
+        if self.name == "uri_counts":
+            raise RuntimeError("simulated crash during init")
+        return real_commit(self, df, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "commit", crashing)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        page_stream.start_page_stream(spark, str(in_dir), cat, str(ckpt))
+    monkeypatch.setattr(SnapshotTable, "commit", real_commit)
+    assert cat.table("index_pages").exists()
+    assert not cat.table("uri_counts").exists()
+
+    q = page_stream.start_page_stream(spark, str(in_dir), cat, str(ckpt))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    want_uc, want_dc, want_rows = (
+        _snap(d) for d in index_batch.build_index(
+            read_pages_json(spark, str(in_dir)), cache=False
+        )
+    )
+    assert _snap(cat.table("uri_counts").read(spark)) == want_uc
+    assert _snap(cat.table("domain_counts").read(spark)) == want_dc
+    assert _snap(cat.table("index_rows").read(spark)) == want_rows

@@ -64,9 +64,7 @@ def run_policy(spark, root, state_df, n_epochs, n_delta, every):
     for e in range(1, n_epochs + 1):
         deltas = epoch_delta(spark, n_delta, e)
         t0 = time.monotonic()
-        sliced = t.read(spark).join(
-            F.broadcast(deltas.select("uri")), "uri", "left_semi"
-        )
+        sliced = delta_ops.touched(t.read(spark), deltas, "uri")
         _, changes = delta_ops.merge_uri_counts(sliced, deltas)
         changes = changes.localCheckpoint(eager=True)
         ups = changes.where(

@@ -9,15 +9,15 @@ representative member; ``--job components`` runs large-star/small-star
 connected components to the fixpoint over a skewed (giant-component)
 graph — the operator most sensitive to round count at 10^10 nodes.
 
-``--mat`` selects the lineage-truncation backend
-(operators/materialize.py): the per-iteration eager barrier was the
-round-5 scaling bottleneck (BENCH/graph_scaling_r05.json, median 0.78),
-so the cadence/lazy variants are first-class here.
+Lineage is cut on the operators' default backend (lazy
+``localCheckpoint``, operators/materialize.py): it won the backend sweep
+(BENCH/mat_sweep_r06.json) against the per-iteration eager barrier that
+was the round-5 scaling bottleneck (BENCH/graph_scaling_r05.json, median
+0.78) and against persist-between-cuts cadences.
 
-Usage:  python tools/bench_graph_scaling.py [--quick] [--job J] [--mat M] [--pairs K] [--edges E]
+Usage:  python tools/bench_graph_scaling.py [--quick] [--job J] [--pairs K] [--edges E]
   --quick            1M edges, 1 pair, 1 pass (smoke)
   --job pagerank|components        (default pagerank)
-  --mat local|local_lazy|cadence2|cadence2_lazy   (default local_lazy)
   --pairs K          number of N-vs-4N pairs (default 4)
 
 Output: one JSON summary line (consumed into BENCH/BASELINE.md).
@@ -34,18 +34,9 @@ RUNNER = r"""
 import json, sys, time
 sys.path.insert(0, ".")
 n_exec, n_edges, passes = int(sys.argv[1]), int(sys.argv[2]), int(sys.argv[3])
-job, mat_name = sys.argv[4], sys.argv[5]
+job = sys.argv[4]
 from webindex_spark.session import get_spark
 from webindex_spark.plans import bench_jobs
-from webindex_spark.operators.materialize import Materializer
-
-def mk_mat():
-    return {
-        "local": lambda: "local",
-        "local_lazy": lambda: "local_lazy",
-        "cadence2": lambda: Materializer("local", every=2),
-        "cadence2_lazy": lambda: Materializer("local_lazy", every=2),
-    }[mat_name]()
 
 # shuffle_partitions = 2x the LARGER level's cores (8), same at both
 # levels (same-config discipline).  Swept at 10M edges: sp=48 left N4
@@ -78,20 +69,20 @@ run = JOBS[job]
 # otherwise later rounds' N=1 runs are cache-warm while the first
 # round's are not, and the efficiency ratio drifts with run order
 # instead of measuring the plan.
-run(spark, n_edges, materialize=mk_mat())
+run(spark, n_edges)
 rates = []
 for _ in range(passes):
-    n, dt = run(spark, n_edges, materialize=mk_mat())
+    n, dt = run(spark, n_edges)
     rates.append(n / dt)
 print(json.dumps({"n_exec": n_exec, "edge_iters_per_sec": round(max(rates), 1)}))
 spark.stop()
 """
 
 
-def run_level(n_exec: int, n_edges: int, passes: int, job: str, mat: str) -> dict:
+def run_level(n_exec: int, n_edges: int, passes: int, job: str) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", RUNNER, str(n_exec), str(n_edges),
-         str(passes), job, mat],
+         str(passes), job],
         capture_output=True, text=True,
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
@@ -102,21 +93,19 @@ def run_level(n_exec: int, n_edges: int, passes: int, job: str, mat: str) -> dic
     return json.loads(line)
 
 
-USAGE = """usage: python tools/bench_graph_scaling.py [--quick] [--job J] [--mat M] [--pairs K]
+USAGE = """usage: python tools/bench_graph_scaling.py [--quick] [--job J] [--pairs K]
 
 Iterative-graph scaling (N vs 4N local-cluster executors).
   --job pagerank|components
-  --mat local|local_lazy|cadence2|cadence2_lazy
 Flags are strict: an unknown argument exits here instead of silently
 starting a long run."""
 
 JOBS = ("pagerank", "components")
-MATS = ("local", "local_lazy", "cadence2", "cadence2_lazy")
 
 
 def main():
     args = sys.argv[1:]
-    quick, job, mat, pairs = False, "pagerank", "local_lazy", 4
+    quick, job, pairs = False, "pagerank", 4
     edges_override, base = None, 1
     i = 0
     while i < len(args):
@@ -126,9 +115,6 @@ def main():
         elif a == "--job" and i + 1 < len(args) and args[i + 1] in JOBS:
             i += 1
             job = args[i]
-        elif a == "--mat" and i + 1 < len(args) and args[i + 1] in MATS:
-            i += 1
-            mat = args[i]
         elif a == "--pairs" and i + 1 < len(args):
             i += 1
             pairs = int(args[i])
@@ -165,8 +151,8 @@ def main():
         # its cross-JVM run-to-run variance (~15% observed) otherwise
         # dominates the ratio — more samples of the SAME statistic,
         # not a different one
-        a = run_level(base, n_edges, passes, job, mat)
-        b = run_level(base * 4, n_edges, passes * 2, job, mat)
+        a = run_level(base, n_edges, passes, job)
+        b = run_level(base * 4, n_edges, passes * 2, job)
         eff = b["edge_iters_per_sec"] / a["edge_iters_per_sec"] / 4
         out_pairs.append(
             {
@@ -188,7 +174,6 @@ def main():
             {
                 "metric": "graph_scaling_efficiency",
                 "job": job,
-                "mat": mat,
                 "base_executors": base,
                 "n_edges": n_edges,
                 "pairs": out_pairs,

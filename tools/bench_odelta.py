@@ -94,9 +94,7 @@ def tick_uri_counts(spark, cat, name, state_df, n_delta, mode):
 
     t0 = time.monotonic()
     if mode == "merge":
-        sliced = t.read(spark).join(
-            F.broadcast(deltas.select("uri")), "uri", "left_semi"
-        )
+        sliced = delta_ops.touched(t.read(spark), deltas, "uri")
         _, changes = delta_ops.merge_uri_counts(sliced, deltas)
         # one state scan total: changes feeds BOTH the upsert and the
         # delete writes (run_epoch checkpoints it for the same reason)

@@ -126,17 +126,16 @@ def connected_components(
     seam when executor loss during the loop must be survivable.
     """
     mat = Materializer.of(materialize)
-    e = mat(
+    e = mat.cut(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct(),
-        force=True,
     )
     prev: tuple | None = None
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
-        e = mat(_small_star(_large_star(e)))
+        e = mat.cut(_small_star(_large_star(e)))
         # decimal(38,0) sum: exact, order-free, and cannot hit the ANSI
         # long-overflow error no matter how many edges participate
         n, h = e.agg(
@@ -148,7 +147,6 @@ def connected_components(
         prev = (n, h)
     else:
         raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
-    e = mat.finish(e)
     # fixpoint edge set is a star forest: src = member, dst = root.
     members = e.select(F.col("src").alias("id"), F.col("dst").alias("component"))
     roots = e.select(F.col("dst").alias("id"), F.col("dst").alias("component"))

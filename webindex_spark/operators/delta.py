@@ -23,6 +23,10 @@ The master invariant (IndexIT.java:107-135): after any sequence of these
 ticks, every state table equals a from-scratch ``index_batch.build_index``
 over the final page set — asserted step-by-step in tests/test_delta.py.
 
+``index_step`` is the same tick against committed snapshot state, sized
+by the delta instead of the state: the one step both a crawl epoch
+(frontier.run_epoch) and a stream micro-batch (page_stream) run.
+
 Physical notes: the diff is one full-outer join on the page key; link-set
 diffs are ``array_except`` on (uri,url) pairs — vectorized, no shuffle
 beyond the join; all merges are key-partitioned joins that Iceberg's
@@ -37,6 +41,7 @@ from pyspark.sql import DataFrame
 
 from webindex_spark.functions.spark_udfs import page_json, rev_encode, uri_rev_domain_col
 from webindex_spark.operators.index_batch import PAGE_SCHEMA
+from webindex_spark.operators.materialize import Materializer
 
 DELTA_SCHEMA = T.StructType(PAGE_SCHEMA.fields + [T.StructField("op", T.StringType(), False)])
 
@@ -59,7 +64,7 @@ def diff_pages(pages_state: DataFrame, deltas: DataFrame):
         F.struct("url", "uri", "outbound_links", "crawl_date", "server", "title").alias("cur_page"),
         F.coalesce(F.col("outbound_links"), F.array().cast(PAGE_SCHEMA["outbound_links"].dataType)).alias("cur_links"),
     )
-    j = d.join(s, "uri", "left").cache()
+    j = d.join(s, "uri", "left")
 
     is_del = F.col("op") == "delete"
     cur_exists = F.col("cur_page").isNotNull()
@@ -85,7 +90,7 @@ def diff_pages(pages_state: DataFrame, deltas: DataFrame):
         ).alias("deleted_links"),
         F.when(is_del, F.lit(-1)).when(~cur_exists, F.lit(1)).otherwise(F.lit(0))
         .cast("long").alias("d_docs"),
-    ).cache()
+    )
 
     # uri deltas: the page's own docs delta + ±1 per added/deleted link target
     own = with_diffs.select("uri", F.lit(0).cast("long").alias("d_links"), F.col("d_docs"))
@@ -303,12 +308,95 @@ def update_index_rows(
     return index_rows.join(delete_keys, ["row", "cf", "cq"], "left_anti").unionByName(inserts)
 
 
+def touched(state: DataFrame, delta_keys: DataFrame, key: str) -> DataFrame:
+    """The rows of ``state`` whose ``key`` occurs in ``delta_keys``: a
+    broadcast SEMI join, so the state side is SCANNED (column-pruned,
+    shuffle-free) but never SHUFFLED.  Iceberg equivalent: MERGE INTO's
+    on-clause pushdown over a table bucketed by the merge key — at
+    deltas too big to broadcast a deployment relies on that bucket
+    co-location; the semantics are identical either way."""
+    return state.join(F.broadcast(delta_keys.select(key)), key, "left_semi")
+
+
+def index_step(
+    deltas: DataFrame,
+    index_pages: DataFrame,
+    uri_counts: DataFrame,
+    domain_counts: DataFrame,
+    mat: Materializer,
+):
+    """One O(delta) tick of the cascade against snapshot state — the
+    step a crawl epoch and a stream micro-batch share.
+
+    Every delta-vs-state join goes through a ``touched`` slice, and each
+    delta-sized frame feeding more than one consumer is cut by ``mat``
+    (the caller's ``Materializer``, which releases the cuts after the
+    last commit).  A cut's plan is its ``LogicalRDD`` scan, so the
+    sliced-state-joins-delta shape never nests one delta's plan inside
+    the next state slice (uncut, the plan grows 2^stages: measured as a
+    driver OOM just printing it).  index_rows itself is never read: its
+    mutations come from delta-sized inputs only.
+
+    Returns ``(tables, (page_mutations, changes, domain_changes))``:
+    ``tables`` maps each of the four index tables to the
+    ``(upserts, merge_keys, deletes)`` of its ``mode="merge"`` commit;
+    the triple is what ``frontier.epoch_meters`` counts."""
+    deltas = mat.cut(deltas)
+    # the page slice feeds both diff outputs: cut, the state is scanned once
+    pages_slice = mat.cut(touched(index_pages, deltas, "uri"))
+    _, uri_deltas, page_mutations = diff_pages(pages_slice, deltas)
+    page_mutations = mat.cut(page_mutations)
+    uri_deltas = mat.cut(uri_deltas)
+    _, changes = merge_uri_counts(
+        touched(uri_counts, uri_deltas, "uri"), uri_deltas
+    )
+    changes = mat.cut(changes)
+    touched_domains = changes.select(
+        uri_rev_domain_col("uri").alias("rev_domain")
+    ).distinct()
+    _, domain_changes = merge_domain_counts(
+        touched(domain_counts, touched_domains, "rev_domain"),
+        changes, with_changes=True,
+    )
+    domain_changes = mat.cut(domain_changes)
+    inserts, delete_keys = index_row_mutations(
+        changes, domain_changes, page_mutations
+    )
+    is_del = F.col("op") == "delete"
+    uri_zero = (F.col("new_links") == 0) & (F.col("new_docs") == 0)
+    dom_zero = F.col("new_pagecount") == 0
+    tables = {
+        "index_pages": (
+            deltas.where(~is_del).select(*[f.name for f in PAGE_SCHEMA.fields]),
+            ["uri"],
+            deltas.where(is_del).select("uri"),
+        ),
+        "uri_counts": (
+            changes.where(~uri_zero).select(
+                "uri",
+                F.col("new_links").alias("links_to"),
+                F.col("new_docs").alias("docs"),
+            ),
+            ["uri"],
+            changes.where(uri_zero).select("uri"),
+        ),
+        "domain_counts": (
+            domain_changes.where(~dom_zero).select(
+                "rev_domain", F.col("new_pagecount").alias("pagecount")
+            ),
+            ["rev_domain"],
+            domain_changes.where(dom_zero).select("rev_domain"),
+        ),
+        "index_rows": (inserts, ["row", "cf", "cq"], delete_keys),
+    }
+    return tables, (page_mutations, changes, domain_changes)
+
+
 def apply_page_deltas(pages_state, uri_counts, domain_counts, index_rows, deltas):
     """One full tick. Returns (pages_next, uri_counts_next,
     domain_counts_next, index_rows_next)."""
     pages_next, uri_deltas, page_mutations = diff_pages(pages_state, deltas)
     uri_counts_next, changes = merge_uri_counts(uri_counts, uri_deltas)
-    changes = changes.cache()
     domain_counts_next, domain_changes = merge_domain_counts(
         domain_counts, changes, with_changes=True
     )

@@ -49,7 +49,10 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
 from webindex_spark.functions.spark_udfs import parse_url
+from webindex_spark.operators import delta as delta_ops
 from webindex_spark.operators import politeness, robots as robots_ops, seen as seen_ops
+from webindex_spark.operators.index_batch import PAGE_SCHEMA, normalize_links
+from webindex_spark.operators.materialize import Materializer
 from webindex_spark.sources.snapshots import Catalog
 
 FRONTIER_SCHEMA = T.StructType(
@@ -337,8 +340,6 @@ def init_crawl(spark: SparkSession, cat: Catalog, seeds: DataFrame, cfg: CrawlCo
         )
         .select(*[f.name for f in FRONTIER_SCHEMA.fields])
     )
-    from webindex_spark.operators.index_batch import PAGE_SCHEMA
-
     empty = lambda schema: spark.createDataFrame([], schema)  # noqa: E731
     lineage = {"seeds": "input"}
     cat.table("frontier").commit(frontier, epoch=0, lineage=lineage)
@@ -365,300 +366,228 @@ def run_epoch(
     """One crawl tick. Inputs are read from epoch-1 snapshots; every output
     table is committed with this epoch. Idempotent: tables already at
     ``epoch`` are left untouched (crash-resume re-entry)."""
-    n_parts, bits, k = cfg.bloom
     prev = epoch - 1
 
     frontier = _read_epoch(spark, cat, "frontier", prev)
     seen_tbl = _read_epoch(spark, cat, "seen", prev)
     bloom_tbl = _read_epoch(spark, cat, "bloom", prev)
     uri_counts = _read_epoch(spark, cat, "uri_counts", prev)
+    # NB: index_rows itself is never read (delta.index_step), so the
+    # engine's LARGEST table costs zero scan per epoch
+    index_pages = _read_epoch(spark, cat, "index_pages", prev)
+    domain_counts = _read_epoch(spark, cat, "domain_counts", prev)
 
-    # 1. robots gate (broadcast join; blocked rows are dropped + marked seen
-    #    so they are never re-attempted)
-    gated = robots_ops.apply_robots(frontier, robots).cache()
-    allowed = gated.where(F.col("allowed"))
-    blocked = gated.where(~F.col("allowed"))
+    # ``mat`` owns every frame this epoch pins or cuts and frees them all
+    # after the last commit, also when a commit fails: a long crawl
+    # accumulates no cached blocks
+    with Materializer() as mat:
+        # 1. robots gate (broadcast join; blocked rows are dropped + marked seen
+        #    so they are never re-attempted)
+        gated = mat.pin(robots_ops.apply_robots(frontier, robots))
+        allowed = gated.where(F.col("allowed"))
+        blocked = gated.where(~F.col("allowed"))
 
-    # 2. politeness schedule: ≤ budget per host, salted two-phase ranking
-    scheduled = politeness.schedule(
-        allowed, cfg.budget, n_salts=cfg.n_salts
-    ).cache()
-
-    fetch_log = scheduled.select(
-        F.lit(epoch).cast("long").alias("epoch"),
-        "host", "uri", "slot", "tick", "is_image",
-    )
-
-    # 3. fetch = join the content tables (the sandbox's simulated fetch;
-    #    on a real crawl this is the executor-side HTTP stage)
-    fetched_pages = (
-        scheduled.where(~F.col("is_image"))
-        .select("uri", "priority")
-        .join(corpus, "uri", "inner")
-        .cache()
-    )
-    fetched_images = (
-        scheduled.where(F.col("is_image"))
-        .select(F.col("uri").alias("image_id"), F.lit(epoch).cast("long").alias("epoch"))
-        .join(images, "image_id", "inner")
-    )
-
-    # 4. link extraction -> canonical candidates (priority = parent*decay)
-    out_raw = fetched_pages.select(
-        F.col("priority"), F.explode("out_urls").alias("url")
-    )
-    children = canonicalize(out_raw, "url").select(
-        "uri", "url", "host", "path", "is_image",
-        (F.col("priority") * cfg.priority_decay).alias("priority"),
-    )
-
-    # 5. seen-set insert: everything scheduled or robots-blocked this epoch
-    newly_seen = (
-        scheduled.select("uri", "host")
-        .unionByName(blocked.select("uri", "host"))
-        .distinct()
-        .cache()
-    )
-    seen_next = seen_tbl.unionByName(newly_seen)
-    # O(delta) filter maintenance: only the shards this epoch's uris land
-    # on are recomputed (touched-slice semi-join inside filter_insert) and
-    # committed as a mode="merge" snapshot keyed on pid — the untouched
-    # ~n_partitions bitmap rows are never rewritten (the reference's
-    # touch-only-dirtied-buckets discipline, UriCombineQ.java:87-90).
-    # Eager checkpoint: the Python insert kernel feeds BOTH the in-epoch
-    # probe (via bloom_next) and the commit — without it each consumer
-    # re-runs the cogroup kernel.
-    bloom_delta = cfg.filter_insert(
-        newly_seen.select("uri"), bloom_tbl, delta_only=True
-    ).localCheckpoint(eager=True)
-    bloom_next = bloom_tbl.join(
-        F.broadcast(bloom_delta.select("pid")), "pid", "left_anti"
-    ).unionByName(bloom_delta)
-
-    # 6. frontier update, O(delta): consumed rows (scheduled + robots-
-    #    blocked) become merge-commit DELETE keys; unseen new candidates
-    #    become UPSERT rows.  A child already on the frontier gets the
-    #    merged value (max priority, min discovery epoch) via ONE
-    #    key-partitioned join of the delta-sized fresh set against the
-    #    frontier — never a groupBy over the whole remaining ∪ fresh
-    #    union (at a 10^9-row frontier that groupBy is a full-state
-    #    shuffle + rewrite per tick).  This is literally the
-    #    ``MERGE INTO frontier`` statement in sources/iceberg_sql.py:
-    #    MATCHED AND consumed -> DELETE; MATCHED -> greatest(priority);
-    #    NOT MATCHED -> INSERT.
-    fresh = cfg.filter_unseen(children, seen_next, bloom_next)
-    fresh_agg = fresh.groupBy("uri").agg(
-        F.first("url").alias("url"),
-        F.first("host").alias("host"),
-        F.first("path").alias("path"),
-        F.max("priority").alias("priority"),
-        F.first("is_image").alias("is_image"),
-    ).localCheckpoint(eager=True)
-    # old values for colliding keys only: broadcast-semi slice of the
-    # frontier (scan, no state shuffle), then a delta×delta left join
-    old_slice = frontier.join(
-        F.broadcast(fresh_agg.select("uri")), "uri", "left_semi"
-    ).select(
-        "uri",
-        F.col("priority").alias("__old_prio"),
-        F.col("discovered_epoch").alias("__old_de"),
-    )
-    frontier_upserts = (
-        fresh_agg.join(old_slice, "uri", "left")
-        .select(
-            "uri", "url", "host", "path",
-            F.greatest(
-                F.col("priority"), F.coalesce("__old_prio", F.lit(float("-inf")))
-            ).alias("priority"),
-            F.least(
-                F.lit(epoch + 1).cast("long"),
-                F.coalesce("__old_de", F.lit((1 << 62))),
-            ).cast("long").alias("discovered_epoch"),
-            "is_image",
+        # 2. politeness schedule: ≤ budget per host, salted two-phase ranking
+        scheduled = mat.pin(
+            politeness.schedule(allowed, cfg.budget, n_salts=cfg.n_salts)
         )
-        .select(*[f.name for f in FRONTIER_SCHEMA.fields])
-    )
-    frontier_tombstones = newly_seen.select("uri")
 
-    # 7. index maintenance: fetched pages become 'put' deltas for the
-    #    incremental engine (operators/delta.py, T1-T5) — the exact code
-    #    path the standalone tests lock to batch-recompute equivalence.
-    from webindex_spark.operators import delta as delta_ops
-    from webindex_spark.operators.index_batch import PAGE_SCHEMA, normalize_links
+        fetch_log = scheduled.select(
+            F.lit(epoch).cast("long").alias("epoch"),
+            "host", "uri", "slot", "tick", "is_image",
+        )
 
-    # NB: index_rows itself is never read — its merge commit is generated
-    # purely from delta-sized inputs (index_row_mutations), so the
-    # engine's LARGEST table costs zero scan per epoch.
-    index_pages_prev = _read_epoch(spark, cat, "index_pages", prev)
-    domain_counts_prev = _read_epoch(spark, cat, "domain_counts", prev)
+        # 3. fetch = join the content tables (the sandbox's simulated fetch;
+        #    on a real crawl this is the executor-side HTTP stage)
+        fetched_pages = mat.pin(
+            scheduled.where(~F.col("is_image"))
+            .select("uri", "priority")
+            .join(corpus, "uri", "inner")
+        )
+        fetched_images = (
+            scheduled.where(F.col("is_image"))
+            .select(F.col("uri").alias("image_id"), F.lit(epoch).cast("long").alias("epoch"))
+            .join(images, "image_id", "inner")
+        )
 
-    # Touched-slice discipline: every join of delta data against a state
-    # table goes through a broadcast SEMI join on the delta's keys first,
-    # so the state side is SCANNED (column-pruned, shuffle-free) but
-    # never SHUFFLED — the per-epoch exchanges are all delta-sized.
-    # Iceberg equivalent: MERGE INTO's on-clause pushdown over a table
-    # bucketed by the merge key (storage-partitioned join) — at deltas
-    # too big to broadcast a deployment relies on that bucket
-    # co-location; the semantics here are identical either way.
-    def touched(state: DataFrame, delta_keys: DataFrame, key: str) -> DataFrame:
-        return state.join(F.broadcast(delta_keys.select(key)), key, "left_semi")
+        # 4. link extraction -> canonical candidates (priority = parent*decay)
+        out_raw = fetched_pages.select(
+            F.col("priority"), F.explode("out_urls").alias("url")
+        )
+        children = canonicalize(out_raw, "url").select(
+            "uri", "url", "host", "path", "is_image",
+            (F.col("priority") * cfg.priority_decay).alias("priority"),
+        )
 
-    ex = fetched_pages.select(
-        F.col("uri").alias("page_uri"), F.explode("out_urls").alias("url")
-    )
-    link_structs = canonicalize(ex, "url").select(
-        "page_uri",
-        F.struct(
-            F.col("url"), F.col("uri"), F.lit("").alias("anchor_text")
-        ).alias("l"),
-    )
-    links_by_page = link_structs.groupBy("page_uri").agg(
-        F.collect_list("l").alias("outbound_links")
-    )
-    deltas = (
-        fetched_pages.select("uri", "url", "title")
-        .join(links_by_page, fetched_pages.uri == links_by_page.page_uri, "left")
-        .select(
-            "url",
+        # 5. seen-set insert: everything scheduled or robots-blocked this epoch
+        newly_seen = mat.pin(
+            scheduled.select("uri", "host")
+            .unionByName(blocked.select("uri", "host"))
+            .distinct()
+        )
+        seen_next = seen_tbl.unionByName(newly_seen)
+        # O(delta) filter maintenance: only the shards this epoch's uris land
+        # on are recomputed (touched-slice semi-join inside filter_insert) and
+        # committed as a mode="merge" snapshot keyed on pid — the untouched
+        # ~n_partitions bitmap rows are never rewritten (the reference's
+        # touch-only-dirtied-buckets discipline, UriCombineQ.java:87-90).
+        # Cut: the Python insert kernel feeds BOTH the in-epoch probe (via
+        # bloom_next) and the commit — without it each consumer re-runs the
+        # cogroup kernel.
+        bloom_delta = mat.cut(
+            cfg.filter_insert(newly_seen.select("uri"), bloom_tbl, delta_only=True)
+        )
+        bloom_next = bloom_tbl.join(
+            F.broadcast(bloom_delta.select("pid")), "pid", "left_anti"
+        ).unionByName(bloom_delta)
+
+        # 6. frontier update, O(delta): consumed rows (scheduled + robots-
+        #    blocked) become merge-commit DELETE keys; unseen new candidates
+        #    become UPSERT rows.  A child already on the frontier gets the
+        #    merged value (max priority, min discovery epoch) via ONE
+        #    key-partitioned join of the delta-sized fresh set against the
+        #    frontier — never a groupBy over the whole remaining ∪ fresh
+        #    union (at a 10^9-row frontier that groupBy is a full-state
+        #    shuffle + rewrite per tick).  This is literally the
+        #    ``MERGE INTO frontier`` statement in sources/iceberg_sql.py:
+        #    MATCHED AND consumed -> DELETE; MATCHED -> greatest(priority);
+        #    NOT MATCHED -> INSERT.
+        fresh = cfg.filter_unseen(children, seen_next, bloom_next)
+        fresh_agg = mat.cut(
+            fresh.groupBy("uri").agg(
+                F.first("url").alias("url"),
+                F.first("host").alias("host"),
+                F.first("path").alias("path"),
+                F.max("priority").alias("priority"),
+                F.first("is_image").alias("is_image"),
+            )
+        )
+        # old values for colliding keys only: touched slice of the frontier
+        # (scan, no state shuffle), then a delta×delta left join
+        old_slice = delta_ops.touched(frontier, fresh_agg, "uri").select(
             "uri",
-            F.lit(None).cast("string").alias("crawl_date"),
-            F.lit(None).cast("string").alias("server"),
-            "title",
-            normalize_links(
-                F.coalesce(
-                    "outbound_links",
-                    F.array().cast(PAGE_SCHEMA["outbound_links"].dataType),
-                )
-            ).alias("outbound_links"),
-            F.lit("put").alias("op"),
+            F.col("priority").alias("__old_prio"),
+            F.col("discovered_epoch").alias("__old_de"),
         )
-    )
-    # pages_state sliced to this epoch's delta keys: diff_pages' left join
-    # then builds from a delta-sized state slice (its full-table
-    # pages_next output is never evaluated here — the index_pages commit
-    # is the merge-mode upserts/tombstones below).
-    #
-    # Lineage discipline: each delta-sized frame that feeds BOTH a slice
-    # semi-join and a downstream merge is cut with an EAGER local
-    # checkpoint — without it the sliced-state-joins-delta shape nests
-    # the delta's plan inside the state slice's plan recursively and the
-    # logical plan grows 2^stages (measured: driver OOM just printing
-    # it).  The frames are delta-sized, so the checkpoint cost is the
-    # delta, never the state.
-    deltas = deltas.localCheckpoint(eager=True)
-    _, uri_deltas, page_mutations = delta_ops.diff_pages(
-        touched(index_pages_prev, deltas, "uri"), deltas
-    )
-    page_mutations = page_mutations.localCheckpoint(eager=True)
-    uri_deltas = uri_deltas.localCheckpoint(eager=True)
-    _, changes = delta_ops.merge_uri_counts(
-        touched(uri_counts, uri_deltas, "uri"), uri_deltas
-    )
-    changes = changes.localCheckpoint(eager=True)
-    from webindex_spark.functions.spark_udfs import uri_rev_domain_col
+        frontier_upserts = (
+            fresh_agg.join(old_slice, "uri", "left")
+            .select(
+                "uri", "url", "host", "path",
+                F.greatest(
+                    F.col("priority"), F.coalesce("__old_prio", F.lit(float("-inf")))
+                ).alias("priority"),
+                F.least(
+                    F.lit(epoch + 1).cast("long"),
+                    F.coalesce("__old_de", F.lit((1 << 62))),
+                ).cast("long").alias("discovered_epoch"),
+                "is_image",
+            )
+            .select(*[f.name for f in FRONTIER_SCHEMA.fields])
+        )
+        frontier_tombstones = newly_seen.select("uri")
 
-    touched_domains = changes.select(
-        uri_rev_domain_col("uri").alias("rev_domain")
-    ).distinct()
-    _, domain_changes = delta_ops.merge_domain_counts(
-        touched(domain_counts_prev, touched_domains, "rev_domain"),
-        changes, with_changes=True,
-    )
-    domain_changes = domain_changes.localCheckpoint(eager=True)
-    index_inserts, index_delete_keys = delta_ops.index_row_mutations(
-        changes, domain_changes, page_mutations
-    )
+        # 7. index maintenance: fetched pages become 'put' deltas for the
+        #    incremental engine's shared step (delta.index_step, T1-T5) —
+        #    the same step a stream micro-batch runs.
+        ex = fetched_pages.select(
+            F.col("uri").alias("page_uri"), F.explode("out_urls").alias("url")
+        )
+        link_structs = canonicalize(ex, "url").select(
+            "page_uri",
+            F.struct(
+                F.col("url"), F.col("uri"), F.lit("").alias("anchor_text")
+            ).alias("l"),
+        )
+        links_by_page = link_structs.groupBy("page_uri").agg(
+            F.collect_list("l").alias("outbound_links")
+        )
+        deltas = (
+            fetched_pages.select("uri", "url", "title")
+            .join(links_by_page, fetched_pages.uri == links_by_page.page_uri, "left")
+            .select(
+                "url",
+                "uri",
+                F.lit(None).cast("string").alias("crawl_date"),
+                F.lit(None).cast("string").alias("server"),
+                "title",
+                normalize_links(
+                    F.coalesce(
+                        "outbound_links",
+                        F.array().cast(PAGE_SCHEMA["outbound_links"].dataType),
+                    )
+                ).alias("outbound_links"),
+                F.lit("put").alias("op"),
+            )
+        )
+        index_tables, meter_inputs = delta_ops.index_step(
+            deltas, index_pages, uri_counts, domain_counts, mat
+        )
 
-    # metrics: ONE job over delta-sized inputs, exact reference meter
-    # semantics (see epoch_meters' docstring) — never a scan of the full
-    # uri_counts state for telemetry.
-    metrics = epoch_meters(page_mutations, changes, domain_changes)
-    part_metrics = _partition_metrics(
-        fetch_log.select("uri"), cfg.metric_partitions
-    )
+        # metrics: ONE job over delta-sized inputs, exact reference meter
+        # semantics (see epoch_meters' docstring) — never a scan of the full
+        # uri_counts state for telemetry.
+        metrics = epoch_meters(*meter_inputs)
+        part_metrics = _partition_metrics(
+            fetch_log.select("uri"), cfg.metric_partitions
+        )
 
-    # ------------------------------------------------------------- commits
-    lineage = {t: prev for t in TABLES}
-    # Commit order matters for crash-resume: run_crawl's done-check watches
-    # the five core tables, and "frontier" commits LAST, so done ⇒ every
-    # earlier commit (incl. pages_state/fetched_images) already published.
-    #
-    # Every per-epoch commit is O(delta) write volume:
-    #   * monotone tables (seen / fetch_log / pages_state / fetched_images)
-    #     append ONLY this epoch's rows (Iceberg: fast-append);
-    #   * MUTATING tables (uri_counts / domain_counts / index_pages /
-    #     index_rows / frontier) commit mode="merge" — upsert rows +
-    #     delete keys, reconciled on read (Iceberg: MERGE INTO with
-    #     merge-on-read equality deletes; the exact statements in
-    #     sources/iceberg_sql.py).  Rewriting any of them in full each
-    #     epoch is O(total-state) — quadratic over a crawl, the last
-    #     10^10-scale killer the round-3 seam still had;
-    #   * the bloom/cuckoo filter ALSO commits mode="merge" keyed on
-    #     pid: one epoch's uris touch a bounded set of (host, salt)
-    #     shards, so only those bitmap rows are recomputed and written
-    #     (delta_only insert above) — at the 10^10 sizing (14.4 GiB over
-    #     1024 shards, docs/SCALE.md) a full rewrite per tick is 14.4 GiB
-    #     of write volume for a few-MiB dirty set.
-    # (uri, new_links, new_docs) -> upsert rows + zero-reaching delete keys
-    uc_upserts = changes.where(
-        (F.col("new_links") != 0) | (F.col("new_docs") != 0)
-    ).select(
-        "uri",
-        F.col("new_links").alias("links_to"),
-        F.col("new_docs").alias("docs"),
-    )
-    uc_deletes = changes.where(
-        (F.col("new_links") == 0) & (F.col("new_docs") == 0)
-    ).select("uri")
-    dc_upserts = domain_changes.where(F.col("new_pagecount") != 0).select(
-        "rev_domain", F.col("new_pagecount").alias("pagecount")
-    )
-    dc_deletes = domain_changes.where(F.col("new_pagecount") == 0).select("rev_domain")
-    ip_upserts = deltas.where(F.col("op") != "delete").select(
-        *[f.name for f in PAGE_SCHEMA.fields]
-    )
-    ip_deletes = deltas.where(F.col("op") == "delete").select("uri")
-
-    outputs = {
-        "pages_state": (
-            fetched_pages.select(
-                "uri", "url", "host", "title", "out_urls",
-                F.lit(epoch).cast("long").alias("fetched_epoch"),
+        # ------------------------------------------------------------- commits
+        lineage = {t: prev for t in TABLES}
+        # Commit order matters for crash-resume: run_crawl's done-check watches
+        # the five core tables, and "frontier" commits LAST, so done ⇒ every
+        # earlier commit (incl. pages_state/fetched_images) already published.
+        #
+        # Every per-epoch commit is O(delta) write volume:
+        #   * monotone tables (seen / fetch_log / pages_state / fetched_images)
+        #     append ONLY this epoch's rows (Iceberg: fast-append);
+        #   * MUTATING tables (uri_counts / domain_counts / index_pages /
+        #     index_rows / frontier) commit mode="merge" — upsert rows +
+        #     delete keys, reconciled on read (Iceberg: MERGE INTO with
+        #     merge-on-read equality deletes; the exact statements in
+        #     sources/iceberg_sql.py).  Rewriting any of them in full each
+        #     epoch is O(total-state) — quadratic over a crawl, the last
+        #     10^10-scale killer the round-3 seam still had;
+        #   * the bloom/cuckoo filter ALSO commits mode="merge" keyed on
+        #     pid: one epoch's uris touch a bounded set of (host, salt)
+        #     shards, so only those bitmap rows are recomputed and written
+        #     (delta_only insert above) — at the 10^10 sizing (14.4 GiB over
+        #     1024 shards, docs/SCALE.md) a full rewrite per tick is 14.4 GiB
+        #     of write volume for a few-MiB dirty set.
+        outputs = {
+            "pages_state": (
+                fetched_pages.select(
+                    "uri", "url", "host", "title", "out_urls",
+                    F.lit(epoch).cast("long").alias("fetched_epoch"),
+                ),
+                "append", None, None,
             ),
-            "append", None, None,
-        ),
-        "fetched_images": (fetched_images, "append", None, None),
-        "fetch_log": (fetch_log, "append", None, None),
-        "seen": (newly_seen, "append", None, None),
-        "bloom": (bloom_delta, "merge", ["pid"], None),
-        "index_pages": (ip_upserts, "merge", ["uri"], ip_deletes),
-        "index_rows": (
-            index_inserts, "merge", ["row", "cf", "cq"], index_delete_keys,
-        ),
-        "domain_counts": (dc_upserts, "merge", ["rev_domain"], dc_deletes),
-        "uri_counts": (uc_upserts, "merge", ["uri"], uc_deletes),
-        "frontier": (frontier_upserts, "merge", ["uri"], frontier_tombstones),
-    }
-    for name, (df, mode, keys, dels) in outputs.items():
-        t = cat.table(name)
-        if t.epoch_of_head() is not None and t.epoch_of_head() >= epoch:
-            continue  # already committed by a previous (killed) run
-        if mode == "append" and not t.exists():
-            mode = "full"
-        t.commit(
-            df, epoch=epoch, lineage=lineage, metrics=metrics,
-            partition_metrics=part_metrics, mode=mode,
-            merge_keys=keys, deletes=dels,
-        )
-        if (
-            mode == "merge"
-            and cfg.compact_every
-            and epoch % cfg.compact_every == 0
-        ):
-            t.compact(spark)
-
-    for c in (gated, scheduled, fetched_pages, newly_seen):
-        c.unpersist()
+            "fetched_images": (fetched_images, "append", None, None),
+            "fetch_log": (fetch_log, "append", None, None),
+            "seen": (newly_seen, "append", None, None),
+            "bloom": (bloom_delta, "merge", ["pid"], None),
+            **{
+                name: (ups, "merge", keys, dels)
+                for name, (ups, keys, dels) in index_tables.items()
+            },
+            "frontier": (frontier_upserts, "merge", ["uri"], frontier_tombstones),
+        }
+        for name, (df, mode, keys, dels) in outputs.items():
+            t = cat.table(name)
+            if t.epoch_of_head() is not None and t.epoch_of_head() >= epoch:
+                continue  # already committed by a previous (killed) run
+            if mode == "append" and not t.exists():
+                mode = "full"
+            t.commit(
+                df, epoch=epoch, lineage=lineage, metrics=metrics,
+                partition_metrics=part_metrics, mode=mode,
+                merge_keys=keys, deletes=dels,
+            )
+            if (
+                mode == "merge"
+                and cfg.compact_every
+                and epoch % cfg.compact_every == 0
+            ):
+                t.compact(spark)
     return metrics
 
 

@@ -68,11 +68,10 @@ def hits(
     adj_d = adj
     srcs = adj.select(F.col("src").alias("id")).distinct()
     n_src = srcs.count()
-    h = mat(
+    h = mat.cut(
         srcs.select(
             "id", F.lit(scale // max(n_src, 1)).cast("long").alias("h")
         ),
-        force=True,
     )
 
     # per iteration: each half-step's raw vector feeds BOTH its L1
@@ -89,7 +88,7 @@ def hits(
     gran = f"greatest(CAST(1 AS BIGINT), coalesce(sum(raw), 0) div {scale}) AS g"
     a = None
     for _ in range(iterations):
-        a_raw = mat(
+        a_raw = mat.cut(
             adj.join(h, adj.src == h.id)
             .select(F.col("dst").alias("id"), F.col("h").alias("c"))
             .groupBy("id")
@@ -98,18 +97,17 @@ def hits(
         a = a_raw.crossJoin(F.broadcast(a_raw.agg(F.expr(gran)))).select(
             "id", F.expr("raw div g").cast("long").alias("a")
         )
-        h_raw = mat(
+        h_raw = mat.cut(
             adj_d.join(a, adj_d.dst == a.id)
             .select(F.col("src").alias("id"), F.col("a").alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("raw"))
         )
-        h = mat(
+        h = mat.cut(
             h_raw.crossJoin(F.broadcast(h_raw.agg(F.expr(gran))))
             .select("id", F.expr("raw div g").cast("long").alias("h"))
         )
 
-    h = mat.finish(h)
     # h covers every node with out-edges, a every node with in-edges;
     # their full outer join is exactly srcs ∪ dsts — the node set —
     # without recomputing the edge derivation for a separate distinct

@@ -82,9 +82,9 @@ def kcore_peel(
             .groupBy("id")
             .agg(F.count(F.lit(1)).cast("long").alias("d"))
         )
-        keep = mat(deg.where(F.col("d") >= k).select("id"))
+        keep = mat.cut(deg.where(F.col("d") >= k).select("id"))
         bkeep = F.broadcast(keep) if broadcast_nodes else keep
-        e2 = mat(
+        e2 = mat.cut(
             e.join(bkeep.withColumnRenamed("id", "a"), "a")
             .join(bkeep.withColumnRenamed("id", "b"), "b")
             .select("a", "b")
@@ -97,7 +97,6 @@ def kcore_peel(
             converged = True
             break
         n_edges = n2
-    e = mat.finish(e)
     deg = (
         e.select(F.col("a").alias("id"))
         .union(e.select(F.col("b").alias("id")))
@@ -141,27 +140,25 @@ def hop_distances(
     # pin (persist) the static edge table: a checkpoint would erase the
     # repartition's layout and re-shuffle the edges every round
     e = mat.pin(e.distinct().repartition("u"))
-    dist = mat(
+    dist = mat.cut(
         seeds.toDF("id").distinct()
         .select("id", F.lit(0).cast("long").alias("dist")),
-        force=True,
     )
     frontier = dist
     r = 0
     while rounds is None or r < rounds:
         r += 1
-        # the frontier is force-cut (never cadence-pinned): isEmpty()
-        # probes it and the NEXT round's anti-join + union both read it
-        reached = mat(
+        # the frontier is cut: isEmpty() probes it and the NEXT round's
+        # anti-join + union both read it
+        reached = mat.cut(
             e.join(frontier, e.u == frontier.id)
             .select(F.col("v").alias("id"))
             .distinct()
             .join(dist, "id", "left_anti")
-            .select("id", F.lit(r).cast("long").alias("dist")),
-            force=True,
+            .select("id", F.lit(r).cast("long").alias("dist"))
         )
         if reached.isEmpty():
             break
-        dist = mat(dist.union(reached))
+        dist = mat.cut(dist.union(reached))
         frontier = reached
-    return mat.finish(dist)
+    return dist

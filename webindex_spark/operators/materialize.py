@@ -1,36 +1,39 @@
-"""Lineage-truncation seam shared by every bounded-round iterative
-operator (pagerank, hits, kcore, bfs, connected components).
+"""The one owner of the frames a job cuts or pins.
 
-Iterative DataFrame jobs must cut their logical-plan lineage
-periodically or the plan grows exponentially (each round's plan embeds
-the previous round's).  HOW to cut is a deployment decision, not an
-algorithm decision:
+Iterative DataFrame jobs must cut their logical-plan lineage or the plan
+grows exponentially (each round's plan embeds the previous round's); the
+incremental index step (operators/delta.index_step) cuts each delta
+frame that feeds more than one consumer so it is computed once.  HOW to
+cut is a deployment decision, not an algorithm decision:
 
-* ``local`` — ``localCheckpoint``: executor-storage-only, fast, the
-  right default for a single-app run.  NOT durable: an executor loss
-  kills the job (Spark cannot recompute a truncated lineage).
+* ``local_lazy`` (default) — lazy ``localCheckpoint``: executor storage
+  only, materialized by the first job that consumes it (no dedicated
+  barrier job).  Its analyzed plan is already the ``LogicalRDD`` scan,
+  so lineage is truncated at the cut whether or not it has run.  NOT
+  durable: an executor loss kills the job (Spark cannot recompute a
+  truncated lineage).
 * ``parquet`` — write/read round-trip under a caller-supplied
   directory: the durable seam for preemptible / multi-tenant clusters,
   mirroring the reference's resume contract (IndexIT.java:107-135 —
   a killed run must resume from its last committed snapshot, never
   refetch).  Equivalent to ``sparkContext.setCheckpointDir`` +
   ``checkpoint()`` but with an inspectable, versioned layout.
-* ``every=k`` cadence — truncate only every k-th call and ``persist``
-  the rounds in between.  Persisted rounds are computed once (first
-  consumer fills the cache) so skipping a cut costs no recompute,
-  while halving the number of materialization barriers — the fix for
-  the round-5 iterative-lane scaling gap (BENCH/graph_scaling_r05.json:
-  per-iteration eager barriers were the bottleneck, not data volume).
 
-Usage inside a loop operator::
+There is no eager cut and no persist-every-k cadence: both lost the
+N→4N sweep to ``local_lazy`` (BENCH/mat_sweep_r06.json).
 
-    mat = Materializer.of(materialize)      # param: str | Materializer
-    for _ in range(rounds):
-        df = step(df)
-        df = mat(df)                        # cadence-aware cut
-    return mat.finish(df)                   # unpersists intermediates
+Release rule: whoever creates a ``Materializer`` owns every frame it
+cut or pinned, and ``release()`` (also the context-manager exit) frees
+them once their last consumer has run::
 
-``Materializer.of`` accepts ``"local"`` / ``"local_lazy"`` /
+    with Materializer() as mat:
+        d = mat.cut(step(df))
+        commit(d)                       # last consumer
+    # every cut/pinned block is unpersisted here, also on error
+
+Iterative graph operators return lazily consumed results built on their
+cuts, so they do not release (their blocks go with the result's
+garbage collection).  ``Materializer.of`` accepts ``"local_lazy"`` /
 ``"parquet:/some/dir"`` / an existing instance, so operators expose a
 single ``materialize=`` keyword and tests parametrize over backends.
 """
@@ -44,33 +47,22 @@ from pyspark.storagelevel import StorageLevel
 
 
 class Materializer:
-    """Cadence-aware lineage cutter.  ``mode``:
+    """Lineage cutter and owner of what it cuts and pins.  ``mode``:
 
-    * ``local``       — eager ``localCheckpoint`` (default)
-    * ``local_lazy``  — lazy ``localCheckpoint`` (materializes at first
-      use; folds the cut into the first consuming job instead of
-      scheduling a dedicated barrier job)
-    * ``parquet``     — durable write/read round-trip under ``path``
-
-    ``every=k`` cuts only on every k-th call; intermediate rounds are
-    ``persist(MEMORY_AND_DISK)``-ed so they are computed exactly once.
-    ``finish`` unpersists everything this instance pinned.
+    * ``local_lazy`` — lazy ``localCheckpoint`` (default)
+    * ``parquet``    — durable write/read round-trip under ``path``
     """
 
-    def __init__(self, mode: str = "local", path: str | None = None,
-                 every: int = 1):
-        if mode not in ("local", "local_lazy", "parquet"):
+    def __init__(self, mode: str = "local_lazy", path: str | None = None):
+        if mode not in ("local_lazy", "parquet"):
             raise ValueError(f"unknown materialize mode: {mode!r}")
         if mode == "parquet" and not path:
             raise ValueError("parquet materializer needs a directory path")
-        if every < 1:
-            raise ValueError("every must be >= 1")
         self.mode = mode
         self.path = path.rstrip("/") if path else None
-        self.every = every
-        self._calls = 0
         self._snaps = 0
-        self._pinned: list[DataFrame] = []
+        self._cuts: list = []  # JVM RDDs under this owner's local checkpoints
+        self._pins: list[DataFrame] = []
 
     @classmethod
     def of(cls, spec) -> "Materializer":
@@ -87,64 +79,53 @@ class Materializer:
             return cls(spec)
         raise TypeError(f"materialize must be a str or Materializer, got {spec!r}")
 
-    def _cut(self, df: DataFrame) -> DataFrame:
-        if self.mode == "local":
-            return df.localCheckpoint(eager=True)
-        if self.mode == "local_lazy":
-            return df.localCheckpoint(eager=False)
-        self._snaps += 1
-        snap = f"{self.path}/snap_{self._snaps:04d}_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(snap)
-        return df.sparkSession.read.parquet(snap)
+    def cut(self, df: DataFrame) -> DataFrame:
+        """Truncate ``df``'s lineage; the result is computed at most once."""
+        if self.mode == "parquet":
+            self._snaps += 1
+            snap = f"{self.path}/snap_{self._snaps:04d}_{uuid.uuid4().hex[:8]}"
+            df.write.mode("overwrite").parquet(snap)
+            return df.sparkSession.read.parquet(snap)
+        df = df.localCheckpoint(eager=False)
+        # DataFrame.unpersist() does not reach a local checkpoint: its
+        # only handle is the RDD under the LogicalRDD the cut's plan is
+        self._cuts.append(df._jdf.queryExecution().analyzed().rdd())
+        return df
 
     def pin(self, df: DataFrame) -> DataFrame:
-        """Cache a STATIC pre-loop frame (adjacency, node table) while
-        PRESERVING its physical layout.
+        """Cache a frame while PRESERVING its physical layout.
 
-        ``localCheckpoint`` — eager or lazy — replaces the plan with an
-        ``ExistingRDD`` scan that reports ``UnknownPartitioning``, so a
-        checkpointed adjacency that was ``repartition()``-ed on the join
-        key is re-shuffled by EVERY iteration's join anyway (measured:
-        the scan node's ``UnknownPartitioning(0)`` in the plan, one
-        edge-list exchange per iteration).  ``persist()`` keeps the
-        logical plan — and with it the repartition's output partitioning
-        — while still computing the frame once, so per-iteration joins
-        against it shuffle only the evolving side.  The parquet backend
-        keeps its durable round-trip (scan partitioning is lost there;
-        durability is that mode's contract).
-
-        Pinned frames are NOT released by :meth:`finish`: unlike cadence
-        intermediates they feed the caller's lazily-consumed result, and
-        unpersisting them before the caller's first action would force a
-        full recompute per consumer.  The context cleaner reclaims them
-        once the result is garbage-collected."""
+        ``localCheckpoint`` replaces the plan with an ``ExistingRDD``
+        scan that reports ``UnknownPartitioning``, so a checkpointed
+        adjacency that was ``repartition()``-ed on the join key is
+        re-shuffled by EVERY iteration's join anyway (measured: the scan
+        node's ``UnknownPartitioning(0)`` in the plan, one edge-list
+        exchange per iteration).  ``persist()`` keeps the logical plan —
+        and with it the repartition's output partitioning — while still
+        computing the frame once, so per-iteration joins against it
+        shuffle only the evolving side.  The parquet backend keeps its
+        durable round-trip (scan partitioning is lost there; durability
+        is that mode's contract)."""
         if self.mode == "parquet":
-            return self._cut(df)
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-    def __call__(self, df: DataFrame, *, force: bool = False) -> DataFrame:
-        """Cut lineage if this call lands on the cadence (or ``force``);
-        otherwise persist and return the uncut frame.  Forced cuts (the
-        static pre-loop state every iterative op pins once) do not
-        advance the cadence counter."""
-        if force:
-            return self._cut(df)
-        self._calls += 1
-        if self._calls % self.every == 0:
-            return self._cut(df)
+            return self.cut(df)
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self._pinned.append(df)
+        self._pins.append(df)
         return df
 
-    def finish(self, df: DataFrame) -> DataFrame:
-        """Release every persisted intermediate.  The returned frame is
-        ``df`` itself — safe because persisted rounds feed only cut
-        frames, never the caller's result lineage... unless the last
-        round was itself a persist, in which case it is force-cut first
-        so unpersisting cannot trigger recomputation downstream."""
-        if self._pinned and df is self._pinned[-1]:
-            df = self._cut(df)
-        for p in self._pinned:
-            p.unpersist(blocking=False)
-        self._pinned.clear()
-        return df
+    def release(self) -> None:
+        """Free every frame this owner cut or pinned.  Only call it once
+        no job will consume them again: a released local checkpoint
+        cannot be recomputed.  Parquet snapshots stay on disk under
+        ``path`` (that mode's inspectable resume surface)."""
+        for rdd in self._cuts:
+            rdd.unpersist(False)
+        for df in self._pins:
+            df.unpersist(blocking=False)
+        self._cuts.clear()
+        self._pins.clear()
+
+    def __enter__(self) -> "Materializer":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()

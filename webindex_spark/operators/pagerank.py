@@ -66,10 +66,9 @@ def pagerank(
     is one.
 
     ``materialize`` selects the lineage-truncation backend (see
-    operators/materialize.py): ``"local"`` for single-app runs,
+    operators/materialize.py): ``"local_lazy"`` for single-app runs,
     ``"parquet:<dir>"`` for the durable seam a preemptible cluster
-    needs, or a preconfigured :class:`Materializer` (e.g. cadence
-    ``every=2`` to halve the barrier count on large graphs).
+    needs, or a preconfigured :class:`Materializer`.
     """
     mat = Materializer.of(materialize)
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -122,7 +121,7 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("c").alias("c"))
         )
-        ranks = mat(
+        ranks = mat.cut(
             nodes.join(contribs, "id", "left")
             .crossJoin(F.broadcast(dsh))
             .select(
@@ -137,4 +136,4 @@ def pagerank(
                 .alias("rank"),
             )
         )
-    return mat.finish(ranks).select("id", "rank")
+    return ranks.select("id", "rank")

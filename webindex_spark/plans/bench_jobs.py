@@ -295,12 +295,12 @@ def pagerank_throughput_job(
     n_edges: int,
     iterations: int = 5,
     tmp_dir: str = "/tmp/webindex_bench_edges",
-    materialize="local",
+    materialize="local_lazy",
 ) -> tuple[int, float]:
     """Returns (edge_iterations, wall_seconds) for the fixed-point
     PageRank loop — the representative bounded-round iterative graph
     job (two linear shuffles + one scalar probe per iteration, lineage
-    truncated on the ``materialize`` backend's cadence)."""
+    truncated per iteration on the ``materialize`` backend)."""
     from webindex_spark.operators.pagerank import pagerank
 
     edges = _bench_edges(spark, n_edges, tmp_dir)
@@ -316,7 +316,7 @@ def components_throughput_job(
     spark: SparkSession,
     n_edges: int,
     tmp_dir: str = "/tmp/webindex_bench_edges",
-    materialize="local",
+    materialize="local_lazy",
 ) -> tuple[int, float]:
     """Returns (edges_processed, wall_seconds) for connected components
     (large-star/small-star to the fixpoint) over a skewed graph: the

@@ -27,6 +27,8 @@ from concurrent.futures import ThreadPoolExecutor
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from webindex_spark.operators import delta as delta_ops
+from webindex_spark.operators.materialize import Materializer
 from webindex_spark.sources.pages_json import GSON_PAGE_SCHEMA, gson_pages_transform
 from webindex_spark.sources.snapshots import Catalog
 
@@ -37,23 +39,26 @@ def _empty_state(spark: SparkSession, cat: Catalog) -> None:
     from webindex_spark.operators.frontier import URI_COUNTS_SCHEMA, INDEX_ROW_SCHEMA
     from webindex_spark.operators.index_batch import PAGE_SCHEMA
 
-    if cat.table("index_pages").exists():
-        return
-    # four independent empty-segment writes: overlapped on driver threads
-    # (guide §2.6) — each is a tiny Spark write job whose cost is pure
-    # scheduling, so running them concurrently hides three of the four
-    inits = {
+    schemas = {
         "index_pages": PAGE_SCHEMA,
         "uri_counts": URI_COUNTS_SCHEMA,
         "domain_counts": "rev_domain string, pagecount long",
         "index_rows": INDEX_ROW_SCHEMA,
     }
-    with ThreadPoolExecutor(max_workers=len(inits)) as pool:
+    # every table is probed: the init commits run concurrently, so a crash
+    # can leave any subset of them published
+    missing = [t for t in STREAM_TABLES if not cat.table(t).exists()]
+    if not missing:
+        return
+    # independent empty-segment writes: overlapped on driver threads
+    # (guide §2.6) — each is a tiny Spark write job whose cost is pure
+    # scheduling, so running them concurrently hides all but one
+    with ThreadPoolExecutor(max_workers=len(missing)) as pool:
         futs = [
             pool.submit(
-                cat.table(t).commit, spark.createDataFrame([], sch), epoch=-1
+                cat.table(t).commit, spark.createDataFrame([], schemas[t]), epoch=-1
             )
-            for t, sch in inits.items()
+            for t in missing
         ]
         for f in futs:
             f.result()
@@ -63,7 +68,6 @@ def apply_page_batch(spark: SparkSession, cat: Catalog, pages: DataFrame,
                      batch_id: int) -> None:
     """One micro-batch through the incremental delta engine, committed as
     snapshot epoch ``batch_id`` (idempotent re-entry per table)."""
-    from webindex_spark.operators import delta as delta_ops
 
     def _epoch(t):
         e = cat.table(t).epoch_of_head()
@@ -89,75 +93,18 @@ def apply_page_batch(spark: SparkSession, cat: Catalog, pages: DataFrame,
             )
         return tbl.read(spark, sid)
 
-    # Same O(delta) discipline as frontier.run_epoch: every
-    # delta-vs-state join goes through a broadcast SEMI touched-slice
-    # (state scanned, never shuffled), every table commits mode="merge"
-    # (upsert rows + delete keys — batch-sized writes, never O(state)),
-    # index_rows is never even read, and each delta frame feeding both a
-    # slice and a merge is cut with a LAZY localCheckpoint: the first
-    # commit that consumes it materializes and caches it (later
-    # consumers read the cache), the streaming lineage is still cut,
-    # and the four dedicated per-frame barrier jobs the eager form
-    # scheduled per micro-batch disappear.
-    from webindex_spark.functions.spark_udfs import uri_rev_domain_col
-    from webindex_spark.operators.index_batch import PAGE_SCHEMA
+    def _commit_one(name, df, keys, dels):
+        if _epoch(name) >= batch_id:
+            return
+        cat.table(name).commit(
+            df, epoch=batch_id, lineage={"stream_batch": batch_id},
+            mode="merge", merge_keys=keys, deletes=dels,
+        )
 
-    deltas = pages.withColumn("op", F.lit("put")).localCheckpoint(eager=False)
-    index_pages_prev = _read_before("index_pages")
-    uri_counts_prev = _read_before("uri_counts")
-    domain_counts_prev = _read_before("domain_counts")
-
-    def touched(state: DataFrame, keys_df: DataFrame, key: str) -> DataFrame:
-        return state.join(F.broadcast(keys_df.select(key)), key, "left_semi")
-
-    _, uri_deltas, mutations = delta_ops.diff_pages(
-        touched(index_pages_prev, deltas, "uri"), deltas
-    )
-    uri_deltas = uri_deltas.localCheckpoint(eager=False)
-    _, changes = delta_ops.merge_uri_counts(
-        touched(uri_counts_prev, uri_deltas, "uri"), uri_deltas
-    )
-    changes = changes.localCheckpoint(eager=False)
-    touched_domains = changes.select(
-        uri_rev_domain_col("uri").alias("rev_domain")
-    ).distinct()
-    _, domain_changes = delta_ops.merge_domain_counts(
-        touched(domain_counts_prev, touched_domains, "rev_domain"),
-        changes, with_changes=True,
-    )
-    domain_changes = domain_changes.localCheckpoint(eager=False)
-    inserts, delete_keys = delta_ops.index_row_mutations(
-        changes, domain_changes, mutations
-    )
-    outputs = {
-        "index_pages": (
-            deltas.where(F.col("op") != "delete")
-            .select(*[f.name for f in PAGE_SCHEMA.fields]),
-            ["uri"],
-            deltas.where(F.col("op") == "delete").select("uri"),
-        ),
-        "uri_counts": (
-            changes.where(
-                (F.col("new_links") != 0) | (F.col("new_docs") != 0)
-            ).select(
-                "uri",
-                F.col("new_links").alias("links_to"),
-                F.col("new_docs").alias("docs"),
-            ),
-            ["uri"],
-            changes.where(
-                (F.col("new_links") == 0) & (F.col("new_docs") == 0)
-            ).select("uri"),
-        ),
-        "domain_counts": (
-            domain_changes.where(F.col("new_pagecount") != 0).select(
-                "rev_domain", F.col("new_pagecount").alias("pagecount")
-            ),
-            ["rev_domain"],
-            domain_changes.where(F.col("new_pagecount") == 0).select("rev_domain"),
-        ),
-        "index_rows": (inserts, ["row", "cf", "cq"], delete_keys),
-    }
+    # The shared O(delta) step (delta.index_step): touched-slice reads,
+    # mode="merge" commits, index_rows never read.  ``mat`` owns its
+    # cuts and frees them after the last commit, also when one fails.
+    #
     # The four table commits are independent of EACH OTHER (each reads its
     # own slice of the shared lazily-checkpointed delta frames, and the
     # snapshot substrate publishes per-table with an atomic HEAD replace),
@@ -170,20 +117,24 @@ def apply_page_batch(spark: SparkSession, cat: Catalog, pages: DataFrame,
     # the partial state the pinned replay (_read_before) is built for —
     # all remaining futures are drained before the error propagates, so a
     # replay never runs concurrently with a straggler commit.
-    def _commit_one(item):
-        name, (df, keys, dels) = item
-        if _epoch(name) >= batch_id:
-            return
-        cat.table(name).commit(
-            df, epoch=batch_id, lineage={"stream_batch": batch_id},
-            mode="merge", merge_keys=keys, deletes=dels,
+    with Materializer() as mat:
+        outputs, _ = delta_ops.index_step(
+            pages.withColumn("op", F.lit("put")),
+            _read_before("index_pages"),
+            _read_before("uri_counts"),
+            _read_before("domain_counts"),
+            mat,
         )
-
-    with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
-        futs = [pool.submit(_commit_one, it) for it in outputs.items()]
-        errs = [e for e in (f.exception() for f in futs) if e is not None]
-        if errs:
-            raise errs[0]
+        with ThreadPoolExecutor(max_workers=len(outputs)) as pool:
+            futs = {n: pool.submit(_commit_one, n, *o) for n, o in outputs.items()}
+            errs = {n: f.exception() for n, f in futs.items() if f.exception()}
+    if len(errs) == 1:
+        raise next(iter(errs.values()))
+    if errs:
+        raise RuntimeError(
+            f"batch {batch_id}: {len(errs)} table commits failed: "
+            + "; ".join(f"{n}: {e!r}" for n, e in errs.items())
+        ) from next(iter(errs.values()))
 
 
 def start_page_stream(spark: SparkSession, input_dir: str, cat: Catalog,
